@@ -358,6 +358,12 @@ object SparkEntry {
       .where(fc.compile)
   }
 
+  /** One request-body parser shared by every route: a configured
+    * `ObjectMapper` is thread-safe for `readTree`, so concurrent handlers
+    * need no per-request instance.
+    */
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** The HTTP serving entry (§3 lifecycle parity): POST the webapp's
     * widget-state JSON, get buckets back as a JSON row array — the
     * reference's browser → nginx → aws-es-kibana → ES `_search` round trip
@@ -382,7 +388,7 @@ object SparkEntry {
   def serveHttp(s: SparkSession, dir: String, port: Int = 0): com.sun.net.httpserver.HttpServer = {
     implicit val spark: SparkSession = s
     import graft.serve.WidgetServer
-    WidgetServer.start(port)(
+    WidgetServer.start(s, port)(
       "/query" -> { body =>
         val li = load(dir, "lineitem")
         val fields = Widgets.fieldsFromDictionary(
@@ -416,7 +422,7 @@ object SparkEntry {
         // The webapp's typeahead against `*harmonized*` (views.js:378-412):
         // {"field": "description", "prefix": "th", "size": 10} → top
         // completions from the pinned federated cache.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val field = o.path("field").asText("description")
         WidgetServer.collectRowsJson(Aggs.typeahead(
           federatedHarmonized(s, warm = true), field,
@@ -429,7 +435,7 @@ object SparkEntry {
         // field AND every state field stay inside the cube (quantization
         // commutes with the rollup — the same doc_values routing as
         // /dashboard); anything else scans the pinned federation.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val field = o.path("field").asText("hour")
         val interval = o.path("interval").asDouble(1.0)
         val state = o.path("state")
@@ -453,7 +459,7 @@ object SparkEntry {
         // tile, {"size": N} to widen. Every request is integer shifts
         // over the at-rest zoom-10 rollup (PreAgg.geoTileGridAt /
         // geoTileGridDrilldown) — no geometry, no corpus, any zoom ≤ 10.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val z = o.path("z").asInt(4)
         val size = o.path("size").asInt(10)
         val cell = o.path("cell").asText("")
@@ -475,7 +481,7 @@ object SparkEntry {
         // the whole route serves from the at-rest rollup whenever the
         // state and field stay inside the cube (the 100 TB doc_values
         // routing, same as /dashboard).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val field = o.path("field").asText("description")
         val size = o.path("size").asInt(10)
         val state = o.path("state")
@@ -497,7 +503,7 @@ object SparkEntry {
         // ranked top-N with each doc's per-term score decomposition
         // (tf/df/idf/dl/contribution/total), the relevance-debugging
         // payload.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val qText = o.path("q").asText("")
         require(qText.nonEmpty, "explain: missing q")
         WidgetServer.collectRowsJson(
@@ -509,7 +515,7 @@ object SparkEntry {
         // ES _termvectors over the wire: {"ids": [1, 2, ...]} — per-(doc,
         // term) frequency + sorted positions for the requested documents
         // (the API is per-document; the id list bounds the scan).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val ids = o.path("ids")
         require(ids.isArray && ids.size() > 0, "termvectors: missing ids")
         val idSeq = (0 until ids.size()).map(ids.get(_).asLong())
@@ -529,7 +535,7 @@ object SparkEntry {
         // response rides the engine's rows-JSON envelope rather than
         // ES's columnar columns/values split (a documented wire delta —
         // one serving shape across every route).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val q = o.path("query").asText("")
         require(q.nonEmpty, "esql: missing query")
         val known = Set("region", "nation", "customer", "supplier", "part",
@@ -587,7 +593,7 @@ object SparkEntry {
         // over the analyzed text; filter compiled by the query_string
         // parser; collapse/after are the Paging tier; highlight wraps
         // matched tokens.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val qText = o.path("q").asText("")
         require(qText.nonEmpty, "search: missing q")
         val size = o.path("size").asInt(10)
@@ -724,7 +730,7 @@ object SparkEntry {
         // through. "standard" is the engine's ASCII tokenizer (the
         // stated subset of ES's standard), "english" adds the stopword
         // filter + the Snowball stemmer.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val text = o.path("text").asText("")
         require(text.nonEmpty, "analyze: missing text")
         val an = analyzerByName(o.path("analyzer").asText("standard"))
@@ -739,7 +745,7 @@ object SparkEntry {
         // "minimum_should_match": "50%", "size": N, "scored": bool}.
         // scored=true (default) returns the BM25 top-k; scored=false the
         // filter-context match set with per-doc matched counts.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val like = o.path("like").asText("")
         require(like.nonEmpty, "mlt: missing like")
         val mltSize = o.path("size").asInt(10)
@@ -771,7 +777,7 @@ object SparkEntry {
         // ES completion suggester: {"prefix": "sp", "size": N,
         // "fuzziness": 0..2, "prefix_length": N} over the documents
         // vocabulary (the at-rest suggest artifact).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val prefix = o.path("prefix").asText("")
         require(prefix.nonEmpty, "complete: missing prefix")
         require(o.path("size").asInt(5) >= 1 && o.path("size").asInt(5) <= 1000,
@@ -797,7 +803,7 @@ object SparkEntry {
         // semantics (candidates prune before ranking, the
         // recall-preserving form); the query vector is looked up by id,
         // the kNN-by-example shape.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         require(o.hasNonNull("vec_id"), "knn: missing vec_id")
         val qid = o.path("vec_id").asLong()
         val emb0 = load(dir, "embeddings")
@@ -862,7 +868,7 @@ object SparkEntry {
         // missing/empty terms, a non-numeric weight, duplicate terms
         // (the array form can carry them; SparseVector rejects), and
         // prune thresholds outside their ES ranges.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val t = o.path("terms")
         val b = Seq.newBuilder[(String, Double)]
         if (t.isObject && t.size() > 0) {
@@ -903,7 +909,7 @@ object SparkEntry {
         // points (the map's clustered-dots layer after a pan/pin).
         // Filters compile to plain comparisons / the pinned haversine
         // tree and push into the scan (PlanSpec).
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val precision = o.path("precision").asInt(2)
         val pts = load(dir, "customer")
           .withColumn("lat", pmod(col("c_acctbal"), lit(180)) - 90 + lit(0.001))
@@ -929,7 +935,7 @@ object SparkEntry {
         // "linear", "weights": [wLex, wVec] (linear only), "mmr":
         // {"k": n, "lambda": l} (optional diversification of the fused
         // list using the embedding vectors)}.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val qText = o.path("q").asText("")
         require(qText.nonEmpty, "fuse: missing q")
         require(o.hasNonNull("vec_id"), "fuse: missing vec_id")
@@ -990,7 +996,7 @@ object SparkEntry {
         // The alerting endpoint: {"queries": {"alert_id": "<query_string
         // text>", ...}} percolated against the documents corpus — one
         // (query_id, doc_id) row per match, the Watcher wire shape.
-        val o = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        val o = json.readTree(body)
         val qs = o.path("queries")
         require(qs.isObject && qs.size() > 0, "percolate: missing queries")
         val it = qs.fields()
@@ -3423,17 +3429,14 @@ object SparkEntry {
       // plays the role of the ES `_index` name the webapp groups fields by.
       // Publishing the union once (not re-deriving it per fetch) mirrors the
       // wildcard index itself: `*dictionary*` is a single at-rest surface.
-      val fed =
-        if (s.catalog.tableExists("graft_dict_federated")) {
-          s.table("graft_dict_federated")
-        } else {
-          val union = Seq("baltimore", "detroit", "losangeles").map { city =>
-            Dictionary.materializeProfile(s, cityPublished(s, city),
-                s"graft_dict_city_$city")
-              .withColumn("dataset", lit(city))
-          }.reduce(_.unionByName(_))
-          Dictionary.publishResult(s, union, "graft_dict_federated")
-        }
+      val fed = graft.store.ServingViews.getOrBuild(s, "graft_dict_federated") {
+        val union = Seq("baltimore", "detroit", "losangeles").map { city =>
+          Dictionary.materializeProfile(s, cityPublished(s, city),
+              s"graft_dict_city_$city")
+            .withColumn("dataset", lit(city))
+        }.reduce(_.unionByName(_))
+        Dictionary.publishResult(s, union, "graft_dict_federated")
+      }
       fed
         .where(col("dict_field").isNotNull)
         .select("dataset", "dict_field", "dict_vargroup", "dict_vartype",

@@ -365,7 +365,8 @@ object Dictionary {
     * on EVERY fetch — ~1 s of driver time per page load at 16 columns ×
     * 3 datasets — whereas a local relation analyzes in ~1 ms. The collect is
     * bounded by the source SCHEMA width (one row per column), never by data
-    * volume, so it is safe at any corpus scale. Idempotent per `viewName`.
+    * volume, so it is safe at any corpus scale. Idempotent per `viewName`,
+    * racing first calls included ([[graft.store.ServingViews]]).
     *
     * `df` is by-name so the warm path never constructs the corpus scan.
     */
@@ -373,13 +374,10 @@ object Dictionary {
       spark: org.apache.spark.sql.SparkSession,
       df: => DataFrame,
       viewName: String,
-      exactDistinct: Boolean = true): DataFrame = {
-    if (!spark.catalog.tableExists(viewName)) {
-      val computed = profile(df, exactDistinct = exactDistinct)
-      publishResult(spark, computed, viewName)
+      exactDistinct: Boolean = true): DataFrame =
+    graft.store.ServingViews.getOrBuild(spark, viewName) {
+      publishResult(spark, profile(df, exactDistinct = exactDistinct), viewName)
     }
-    spark.table(viewName)
-  }
 
   /** Pin a schema-bounded result frame as a local-relation temp view: the
     * "stored in the hot index" half of the serving contract. `maxRows` is a

@@ -53,15 +53,14 @@ final case class Federation(datasets: Map[String, DataFrame]) {
     *
     * Idempotent per `viewName`: if the view already exists in this session
     * the existing (already-warm) cache entry is reused — callers can invoke
-    * this per request, serving-tier style, and only the first pays the scan.
+    * this per request, serving-tier style, and only the first pays the scan
+    * (concurrent first callers included: [[graft.store.ServingViews]]).
     */
-  def materialize(spark: SparkSession, pattern: String, viewName: String): DataFrame = {
-    if (!spark.catalog.tableExists(viewName)) {
+  def materialize(spark: SparkSession, pattern: String, viewName: String): DataFrame =
+    graft.store.ServingViews.getOrBuild(spark, viewName) {
       view(pattern).createOrReplaceTempView(viewName)
       spark.catalog.cacheTable(viewName)
     }
-    spark.table(viewName)
-  }
 }
 
 object Federation {

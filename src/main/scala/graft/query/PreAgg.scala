@@ -1197,8 +1197,8 @@ object PreAgg {
       df: => DataFrame,
       dims: Seq[(String, Column)],
       viewName: String,
-      publishBound: Int = 100000): DataFrame = {
-    if (!spark.catalog.tableExists(viewName)) {
+      publishBound: Int = 100000): DataFrame =
+    graft.store.ServingViews.getOrBuild(spark, viewName) {
       val rollup = increment(df, dims)
       val head = rollup.limit(publishBound + 1).collect()
       if (head.length <= publishBound) {
@@ -1210,6 +1210,4 @@ object PreAgg {
         spark.catalog.cacheTable(viewName)
       }
     }
-    spark.table(viewName)
-  }
 }

@@ -1,7 +1,9 @@
 package graft.serve
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A minimal localhost HTTP serving entry — the engine-side analogue of the
   * reference's webapp/proxy tier (`services/webapp/src/index.js`,
@@ -18,6 +20,21 @@ import org.apache.spark.sql.DataFrame
   * the reference delegates those to nginx, and so does this seam. The
   * DataFrames a route returns are dashboard-cardinality (bucket lists), so
   * `collectRowsJson`'s driver collect is bounded by construction.
+  *
+  * Concurrency model: requests run on a fixed pool of daemon handler
+  * threads (`graft-http-N`), one per slot of the serving session's
+  * `sparkContext.defaultParallelism` — as many concurrent requests as the
+  * session has cores, so clients plan, schedule their small jobs and
+  * collect in parallel instead of queueing behind one dispatcher thread;
+  * further requests wait in the pool's queue. Idle handler threads time
+  * out, so a stopped server leaves none behind. Each request runs with the
+  * serving session active on its thread and its own Spark job group
+  * (`graft-http-<seq>`, described by the route path, interruptible), both
+  * cleared when the request ends, so a reused pool thread inherits nothing
+  * from the request before it. The warm-serving views the routes share
+  * (federated cache, rollups, published dictionaries) build at most once
+  * when first requests race ([[graft.store.ServingViews]]). Out of scope
+  * here: request deadlines, admission shedding and result caching.
   */
 object WidgetServer {
 
@@ -29,9 +46,10 @@ object WidgetServer {
   def collectRowsJson(df: DataFrame): String =
     df.toJSON.collect().mkString("[", ",", "]")
 
-  /** Start a localhost server with `routes` of `path -> (requestBody =>
-    * responseJson)`. `port = 0` binds an ephemeral port (read it back from
-    * `server.getAddress.getPort` — the spec's pattern).
+  /** Start a localhost server over `spark` with `routes` of `path ->
+    * (requestBody => responseJson)`. `port = 0` binds an ephemeral port
+    * (read it back from `server.getAddress.getPort` — the spec's pattern).
+    * Routes run concurrently on the handler pool described above.
     *
     * Status mapping follows the reference proxy's split between client and
     * server faults (aws-es-kibana forwards ES's own 4xx for malformed query
@@ -43,9 +61,11 @@ object WidgetServer {
     * re-checks both: exact path (404 otherwise) and POST-only (405), as
     * nginx would enforce in front of the reference.
     */
-  def start(port: Int = 0)(routes: (String, String => String)*): HttpServer = {
+  def start(spark: SparkSession, port: Int = 0)(
+      routes: (String, String => String)*): HttpServer = {
     val server = HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", port), 0)
+    server.setExecutor(handlerPool(spark.sparkContext.defaultParallelism))
     routes.foreach { case (path, route) =>
       server.createContext(path, new HttpHandler {
         override def handle(ex: HttpExchange): Unit = {
@@ -58,7 +78,7 @@ object WidgetServer {
               else {
                 val body = new String(ex.getRequestBody.readAllBytes(),
                   java.nio.charset.StandardCharsets.UTF_8)
-                Right(route(body))
+                Right(inRequest(spark, path)(route(body)))
               }
             } catch {
               case e @ (_: IllegalArgumentException |
@@ -83,6 +103,37 @@ object WidgetServer {
     }
     server.start()
     server
+  }
+
+  private val handlerThreads = new AtomicInteger
+  private val requestSeq = new AtomicLong
+
+  /** `size` daemon handler threads that exit after 30 s idle. */
+  private def handlerPool(size: Int): ThreadPoolExecutor = {
+    val pool = new ThreadPoolExecutor(size, size, 30L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, s"graft-http-${handlerThreads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** Run one request's route on the current (pool) thread with `spark`
+    * active and a fresh job group described by `route`; both are cleared
+    * afterwards, whatever the route did.
+    */
+  private[serve] def inRequest[T](spark: SparkSession, route: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    SparkSession.setActiveSession(spark)
+    sc.setJobGroup(s"graft-http-${requestSeq.incrementAndGet()}", route,
+      interruptOnCancel = true)
+    try body
+    finally {
+      sc.clearJobGroup()
+      SparkSession.clearActiveSession()
+    }
   }
 
   private[serve] def quoteJson(s: String): String = {

@@ -3,6 +3,7 @@ package graft.serve
 import graft.{SparkEntry, SparkSpecBase}
 import graft.dict.Dictionary
 import graft.query.{FieldCollection, Widgets}
+import org.apache.spark.sql.SparkSession
 
 /** The HTTP serving entry (§3 lifecycle parity): the reference's
   * browser → proxy → ES round trip is widget-state JSON in, bucket JSON
@@ -939,5 +940,169 @@ class WidgetServerSpec extends SparkSpecBase {
       assert(body === direct)
       assert(post(s"http://127.0.0.1:$port/percolate", """{}""")._1 === 400)
     } finally server.stop(0)
+  }
+
+  // --- concurrency: the handler pool, single-flight cold builds, and
+  // per-request job tagging ---
+
+  /** Jobs seen by a listener while `body` runs: (job group, description,
+    * stage call sites), drained before returning.
+    */
+  private def jobsDuring[T](body: => T): (T, Seq[(String, String, String)]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description"),
+          e.stageInfos.map(_.details).mkString("\n")))
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.SpecListenerBus.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def postAsync(url: String, body: String) =
+    java.net.http.HttpClient.newHttpClient().sendAsync(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+
+  test("the handler pool answers a second request while the first is still running") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val entered = new CountDownLatch(1)
+    val gate = new CountDownLatch(1)
+    val server = WidgetServer.start(spark)(
+      // blocks until /release runs — which a one-thread server never
+      // gets to while this request holds its only thread
+      "/wait" -> { _ =>
+        entered.countDown()
+        if (gate.await(10, TimeUnit.SECONDS)) "[\"released\"]"
+        else throw new IllegalStateException("not released within 10 s")
+      },
+      "/release" -> { _ => gate.countDown(); "[]" })
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val first = postAsync(s"$base/wait", "")
+      assert(entered.await(10, TimeUnit.SECONDS), "/wait never started")
+      assert(post(s"$base/release", "") === ((200, "[]")))
+      val resp = first.get(20, TimeUnit.SECONDS)
+      assert((resp.statusCode(), resp.body()) === ((200, "[\"released\"]")))
+    } finally server.stop(0)
+  }
+
+  test("handler threads are named daemon threads of a pool sized by defaultParallelism that idles out") {
+    val server = WidgetServer.start(spark)("/thread" -> { _ =>
+      val t = Thread.currentThread()
+      s"""[{"name": "${t.getName}", "daemon": ${t.isDaemon}}]"""
+    })
+    try {
+      val (code, body) = post(s"http://127.0.0.1:${server.getAddress.getPort}/thread", "")
+      assert(code === 200)
+      assert(body.matches("""\[\{"name": "graft-http-\d+", "daemon": true\}\]"""), body)
+      val pool = server.getExecutor.asInstanceOf[java.util.concurrent.ThreadPoolExecutor]
+      assert(pool.getCorePoolSize === spark.sparkContext.defaultParallelism)
+      assert(pool.getMaximumPoolSize === spark.sparkContext.defaultParallelism)
+      assert(pool.allowsCoreThreadTimeOut())
+    } finally server.stop(0)
+  }
+
+  test("each request's jobs carry its own job group and route; a reused thread inherits none") {
+    val session = spark.newSession()
+    val sc = spark.sparkContext
+    def route(name: String): (String, String => String) = name -> { _ =>
+      session.range(10).count()
+      val active = SparkSession.getActiveSession.exists(_ eq session)
+      s"""["${sc.getLocalProperty("spark.jobGroup.id")}", "${Thread.currentThread().getName}", "$active"]"""
+    }
+    val server = WidgetServer.start(session)(route("/a"), route("/b"))
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      // sequential: the first `pool` requests each start a new pool thread,
+      // the last one must reuse one of them
+      val pool = sc.defaultParallelism
+      val paths = Seq.fill(pool)("/a") :+ "/b"
+      val (answers, jobs) = jobsDuring(paths.map { p =>
+        val (code, body) = post(base + p, "")
+        assert(code === 200, body)
+        val Array(group, thread, active) =
+          body.stripPrefix("[\"").stripSuffix("\"]").split("\", \"")
+        assert(active === "true", s"$p ran without its session active")
+        (p, group, thread)
+      })
+      assert(answers.map(_._2).distinct.size === answers.size, answers)
+      answers.foreach { case (p, group, _) =>
+        assert(group.matches("graft-http-\\d+"), group)
+        val own = jobs.filter(_._1 == group)
+        assert(own.nonEmpty, s"no job tagged $group")
+        assert(own.forall(_._2 == p), own)
+      }
+      val (_, lastGroup, lastThread) = answers.last
+      assert(answers.init.exists(_._3 == lastThread),
+        s"$lastThread is not one of the earlier requests' threads")
+      assert(jobs.filter(_._2 == "/b").forall(_._1 == lastGroup), jobs)
+    } finally server.stop(0)
+  }
+
+  test("the request scope clears the job group and active session it set, even on failure") {
+    val sc = spark.sparkContext
+    @volatile var seen: Seq[Any] = Nil
+    val t = new Thread(() => {
+      val inside = WidgetServer.inRequest(spark, "/x")(sc.getLocalProperty("spark.job.description"))
+      intercept[IllegalStateException] {
+        WidgetServer.inRequest(spark, "/y")(throw new IllegalStateException("boom"))
+      }
+      seen = Seq(inside, sc.getLocalProperty("spark.jobGroup.id"),
+        sc.getLocalProperty("spark.job.description"),
+        sc.getLocalProperty("spark.job.interruptOnCancel"),
+        SparkSession.getActiveSession)
+    })
+    t.start(); t.join(30000)
+    assert(seen === Seq("/x", null, null, null, None))
+  }
+
+  test("racing first calls build a serving view once") {
+    val session = spark.newSession()
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val calls = (1 to 4).map(_ => pool.submit(() =>
+        graft.store.ServingViews.getOrBuild(session, "graft_spec_once") {
+          builds.incrementAndGet()
+          Thread.sleep(200)
+          session.range(3).createOrReplaceTempView("graft_spec_once")
+        }.count()))
+      assert(calls.map(_.get()) === Seq.fill(4)(3L))
+      assert(builds.get() === 1)
+    } finally pool.shutdown()
+  }
+
+  test("four concurrent cold /dashboard posts agree and build the rollup once") {
+    def rollupBuildJobs(jobs: Seq[(String, String, String)]) =
+      jobs.count(_._3.contains("PreAgg$.materialize"))
+    // one cold request alone: how many jobs one rollup build runs
+    val (soloBody, soloJobs) = jobsDuring {
+      val server = SparkEntry.serveHttp(spark.newSession(), sfDir)
+      try post(s"http://127.0.0.1:${server.getAddress.getPort}/dashboard", "")
+      finally server.stop(0)
+    }
+    assert(soloBody._1 === 200)
+    assert(rollupBuildJobs(soloJobs) > 0, soloJobs.map(_._3.take(200)))
+    // four at once on another fresh session: same buckets, one build
+    val (bodies, jobs) = jobsDuring {
+      val server = SparkEntry.serveHttp(spark.newSession(), sfDir)
+      try {
+        val url = s"http://127.0.0.1:${server.getAddress.getPort}/dashboard"
+        (1 to 4).map(_ => postAsync(url, ""))
+          .map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+          .map(r => (r.statusCode(), r.body()))
+      } finally server.stop(0)
+    }
+    assert(bodies.distinct === Seq(soloBody))
+    assert(rollupBuildJobs(jobs) === rollupBuildJobs(soloJobs))
   }
 }
